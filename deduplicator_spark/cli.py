@@ -18,8 +18,9 @@ Sandbox usage (local[N] — same code path):
 Subcommands:
     synth   write a deterministic synthetic image+caption corpus
     run     end-to-end dedup: tiers -> verify -> cluster -> verdicts(+metrics)
-            (--checkpoint-dir makes it resumable; --resume reuses committed
-            stages from a previous, possibly killed, run)
+            (--checkpoint-dir is run_pipeline(checkpoint_dir=...): every
+            stage commits there; --resume reuses committed stages from a
+            previous, possibly killed, run)
     index   the reference's IndexingLauncher analog: read captures from any
             registered source (crawl_log / warc / parquet), run the composed
             §3.1 build (gates -> revisit projection -> canonicalize ->
@@ -34,8 +35,7 @@ Subcommands:
             in-stream dedup over a file-arrival directory: the SHARDED
             stateful operators (the engine defaults) through the
             exactly-once foreachBatch sink, availableNow per invocation
-            (re-runs process only NEW files); --fine for the per-key
-            semantic-reference variants
+            (re-runs process only NEW files)
 """
 
 from __future__ import annotations
@@ -63,7 +63,6 @@ def cmd_synth(args) -> int:
 
 
 def cmd_run(args) -> int:
-    from .plans.checkpoint import run_pipeline_resumable
     from .plans.pipeline import run_pipeline
     from .synth import synthesize_images
 
@@ -90,16 +89,11 @@ def cmd_run(args) -> int:
     n = images.count()
 
     t0 = time.perf_counter()
-    if args.checkpoint_dir:
-        if not args.resume:
-            shutil.rmtree(args.checkpoint_dir, ignore_errors=True)
-        result = run_pipeline_resumable(
-            images, args.checkpoint_dir, tiers=tiers,
-            verify_pixels=not args.no_verify, run_id=args.run_id,
-        )
-    else:
-        result = run_pipeline(images, tiers=tiers, verify_pixels=not args.no_verify,
-                              run_id=args.run_id, persist_input=persist)
+    if args.checkpoint_dir and not args.resume:
+        shutil.rmtree(args.checkpoint_dir, ignore_errors=True)
+    result = run_pipeline(images, tiers=tiers, verify_pixels=not args.no_verify,
+                          run_id=args.run_id, persist_input=persist,
+                          checkpoint_dir=args.checkpoint_dir)
     if args.output:
         result.verdicts.write.mode("overwrite").parquet(f"{args.output}/verdicts")
         result.clusters.write.mode("overwrite").parquet(f"{args.output}/clusters")
@@ -188,14 +182,14 @@ def cmd_stream_dedup(args) -> int:
     once through the checkpointed exactly-once sink, then the command
     exits via availableNow; re-running picks up only NEW files).
 
-    Routes to the SHARDED stateful operators by default — the documented
-    engine defaults (5.3x/2.4x the fine-grained ingest at row-identical
-    output, 2v8 scaling 0.988; BENCH/STREAM_E2E_SHARDED.md) — with
-    --fine opting into the per-key semantic-reference variants.
+    Runs the SHARDED stateful operators — the documented engine defaults
+    (5.3x/2.4x the fine-grained ingest at row-identical output, 2v8
+    scaling 0.988; BENCH/STREAM_E2E_SHARDED.md).
 
     Operators:
       stats    per-digest running dup statistics over captures
-               (record_id, digest, ts) — update-mode running totals
+               (record_id, digest, ts) — update mode: data/ keeps every
+               micro-batch's running total, latest n_seen per digest wins
       neardup  in-stream pHash near-dup (no prior index) over images
                (image_id, phash, ts) — one row per (arrival, band)
     """
@@ -208,20 +202,23 @@ def cmd_stream_dedup(args) -> int:
     stream = read_capture_stream(spark, args.input, schema,
                                  max_files_per_trigger=args.max_files)
     if args.operator == "stats":
-        fn = st.streaming_dup_stats if args.fine else st.dup_stats
-        mode = "update"   # running totals re-emit per micro-batch
+        fn, mode = st.dup_stats, "update"   # running totals re-emit per batch
     else:
-        fn = st.streaming_neardup_dedup if args.fine else st.neardup_dedup
-        mode = "append"   # one immutable row per (arrival, band)
+        fn, mode = st.neardup_dedup, "append"   # one row per (arrival, band)
     out = fn(stream, watermark=args.watermark)
     ckpt = args.checkpoint_dir or f"{args.output}/_ckpt"
     q = write_exactly_once(out, args.output, ckpt, output_mode=mode)
     q.awaitTermination()
     rows = read_committed(spark, args.output)
     n = rows.count()
-    variant = "fine" if args.fine else "sharded"
-    print(f"  operator        {args.operator} ({variant})")
-    print(f"  committed rows  {n} -> {args.output}/data")
+    print(f"  operator           {args.operator}")
+    if args.operator == "stats":
+        # superseded running totals stay in data/; their number depends on
+        # the micro-batch split (--max-files), the digest count does not
+        print(f"  running-total rows {n} -> {args.output}/data")
+        print(f"  digests            {rows.select('digest').distinct().count()}")
+    else:
+        print(f"  committed rows     {n} -> {args.output}/data")
     return 0
 
 
@@ -353,8 +350,7 @@ def main(argv: list[str] | None = None) -> int:
     pd = sub.add_parser(
         "stream-dedup",
         help="in-stream dedup over a file-arrival directory (exactly-once "
-             "sink; SHARDED stateful operators by default, --fine for the "
-             "per-key reference variants)")
+             "sink; SHARDED stateful operators)")
     pd.add_argument("--input", required=True,
                     help="directory of arriving parquet files")
     pd.add_argument("--output", required=True,
@@ -363,9 +359,6 @@ def main(argv: list[str] | None = None) -> int:
                     help="stream checkpoint (default <output>/_ckpt)")
     pd.add_argument("--operator", choices=("stats", "neardup"),
                     default="stats")
-    pd.add_argument("--fine", action="store_true",
-                    help="per-key state variants (semantic reference; "
-                         "sharded is the default and the fast path)")
     pd.add_argument("--watermark", default="2 hours")
     pd.add_argument("--max-files", type=int, default=None,
                     help="maxFilesPerTrigger (micro-batch size control)")

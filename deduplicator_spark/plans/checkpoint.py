@@ -1,4 +1,7 @@
-"""Stage-level checkpointing: resumable pipeline + per-partition lineage.
+"""Stage-level checkpointing: a stage store + per-partition lineage.
+
+``plans.pipeline.run_pipeline(checkpoint_dir=...)`` commits each of its
+stages here, which makes the pipeline resumable.
 
 North-rule requirement: "resumable from Iceberg-snapshot checkpoints with
 per-partition lineage and metrics tables". In production each stage commits
@@ -202,91 +205,3 @@ class StageStore:
         return self.spark.read.option("basePath", os.path.join(self.root, "_lineage")) \
             .parquet(os.path.join(self.root, "_lineage", "*"))
 
-
-def run_pipeline_resumable(
-    images: DataFrame,
-    root: str,
-    cfg: DedupConfig = DEFAULT,
-    tiers: tuple[str, ...] = ("exact", "near_image", "near_caption", "containment"),
-    verify_pixels: bool = True,
-    run_id: str = "run",
-    stop_after: str | None = None,
-    validate_payloads: bool = True,
-):
-    """Checkpointed variant of plans.pipeline.run_pipeline.
-
-    Stages: validate -> edges -> clusters -> verdicts -> metrics. Each
-    commits to the StageStore; on restart, committed stages (same config
-    fingerprint AND same input identity) are read back instead of
-    recomputed. The validate stage commits the fused digest+quarantine
-    features, so the resumable path applies the SAME payload validation as
-    run_pipeline and resume stays deterministic across a kill between
-    validation and edge generation. ``stop_after`` simulates a mid-job kill
-    for resume tests (returns None after committing that stage).
-    """
-    from ..operators.candidates import canonical_pairs
-    from ..operators.components import connected_components
-    from .pipeline import (
-        DedupResult,
-        bad_ids_from_features,
-        build_metrics,
-        candidate_edges,
-        validation_features,
-        verdicts_from_clusters,
-    )
-
-    spark = images.sparkSession
-    store = StageStore(spark, root, cfg, run_id,
-                       input_token=input_identity(images))
-
-    bad = None
-    digests = None
-    if validate_payloads:
-        if store.has("validate"):
-            feats = store.read("validate")
-        else:
-            feats = store.write("validate", validation_features(images))
-        if stop_after == "validate":
-            return None
-        bad = bad_ids_from_features(feats, cfg)
-        images = images.join(F.broadcast(bad), "image_id", "left_anti")
-        digests = feats.join(F.broadcast(bad), "image_id", "left_anti") \
-            .select("image_id", "digest")
-
-    if store.has("edges"):
-        edges = store.read("edges")
-    else:
-        edges = store.write(
-            "edges",
-            candidate_edges(images, cfg, tiers, verify_pixels, digests=digests),
-        )
-    if stop_after == "edges":
-        return None
-
-    if store.has("clusters"):
-        clusters = store.read("clusters")
-    else:
-        clusters = store.write(
-            "clusters",
-            connected_components(canonical_pairs(edges),
-                                 nodes=images.select("image_id"), cfg=cfg),
-        )
-    if stop_after == "clusters":
-        return None
-
-    if store.has("verdicts"):
-        verdicts = store.read("verdicts")
-    else:
-        verdicts = store.write("verdicts", verdicts_from_clusters(images, clusters, edges))
-    if stop_after == "verdicts":
-        return None
-
-    if store.has("metrics"):
-        metrics = store.read("metrics")
-    else:
-        metrics = store.write(
-            "metrics",
-            build_metrics(run_id, images, edges, verdicts, quarantined=bad),
-        )
-
-    return DedupResult(pairs=edges, clusters=clusters, verdicts=verdicts, metrics=metrics)

@@ -6,16 +6,22 @@ reference probes one record at a time against a frozen Lucene index, this runs
 the whole corpus through four similarity tiers as set-oriented jobs, then
 assigns every row a verdict + refers-to lineage in one pass.
 
-Payload-byte passes (the 100 TB cost driver): with validate_payloads=True the
-exact sha256 digest rides in the SAME Arrow decode pass as payload validation
+Stages: validate -> edges -> clusters -> verdicts -> metrics, composed once
+in ``run_pipeline``. With ``checkpoint_dir`` each stage commits to a
+plans.checkpoint.StageStore and a re-run reads committed stages back instead
+of rebuilding them (resume after a kill); without it the validate and edges
+stages are persisted in memory and the rest stay lazy.
+
+Payload-byte passes (the dominant cost at 100 TB): the exact sha256 digest rides
+in the SAME Arrow decode pass as payload validation
 (operators/media.image_features), so the full corpus bytes are read exactly
 ONCE up front; the only other byte read is the PSNR verification join, which
-touches candidate pairs only. With validation off, the exact tier's JVM
-sha2 scan is the single full read. Bytes are never cached.
+touches candidate pairs only. Bytes are never cached.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 from functools import reduce
 
@@ -30,9 +36,17 @@ from ..operators.exact import exact_pairs, exact_pairs_from_digests
 from ..operators.minhash import near_caption_pairs
 from ..operators.simhash import near_image_pairs
 from ..operators.verify import verify_image_pairs
+from .checkpoint import StageStore, input_identity
 
 TIER_PRIORITY = {"exact": 1, "near_image": 2, "near_caption": 3,
                  "containment": 4, "winnow": 5}
+
+
+def _tier_priority():
+    """Rank of the ``tier`` column under TIER_PRIORITY (1 = strongest)."""
+    return F.coalesce(
+        *[F.when(F.col("tier") == t, F.lit(p)) for t, p in TIER_PRIORITY.items()]
+    )
 
 
 @dataclass
@@ -101,12 +115,10 @@ def candidate_edges(images: DataFrame, cfg: DedupConfig = DEFAULT,
     if not dedup_pairs:
         return edges
     # one edge per pair: keep the highest-priority tier (exact beats near_*)
-    prio = F.coalesce(
-        *[F.when(F.col("tier") == t, F.lit(p)) for t, p in TIER_PRIORITY.items()]
-    )
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy("id_a", "id_b").orderBy(prio.asc(), F.col("score").desc())
+    w = Window.partitionBy("id_a", "id_b").orderBy(_tier_priority().asc(),
+                                                   F.col("score").desc())
     return (
         edges.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
@@ -126,13 +138,10 @@ def verdicts_from_clusters(images: DataFrame, clusters: DataFrame,
       (the 3-way classification of DeDuplicator.java:194-205 generalized to
       4 tiers).
     """
-    prio = F.coalesce(
-        *[F.when(F.col("tier") == t, F.lit(p)) for t, p in TIER_PRIORITY.items()]
-    )
     incident = (
         edges.select(F.col("id_a").alias("image_id"), "tier")
         .unionByName(edges.select(F.col("id_b").alias("image_id"), "tier"))
-        .withColumn("_p", prio)
+        .withColumn("_p", _tier_priority())
         .groupBy("image_id")
         .agg(F.min_by("tier", F.col("_p")).alias("dup_class"))
     )
@@ -178,12 +187,6 @@ def bad_ids_from_features(feats: DataFrame, cfg: DedupConfig = DEFAULT) -> DataF
     ).select("image_id")
 
 
-def quarantine_ids(images: DataFrame, cfg: DedupConfig = DEFAULT) -> DataFrame:
-    """Standalone quarantine gate (one decode pass; see validation_features
-    for the fused digest+validation form pipelines should prefer)."""
-    return bad_ids_from_features(validation_features(images), cfg)
-
-
 def _metric_rows(df: DataFrame, stage: str, metric, value) -> DataFrame:
     return df.select(
         F.lit(stage).alias("stage"),
@@ -217,36 +220,64 @@ def build_metrics(run_id: str, images: DataFrame, edges: DataFrame,
     )
 
 
+def _stage(store: StageStore | None, name: str,
+           build: Callable[[], DataFrame], persist: bool) -> DataFrame:
+    """One pipeline stage. With a store: read the committed stage back, or
+    build and commit it (a committed stage is never planned again). Without
+    one: build it, persisted when ``persist``."""
+    if store is None:
+        return build().persist() if persist else build()
+    if store.has(name):
+        return store.read(name)
+    return store.write(name, build())
+
+
 def run_pipeline(images: DataFrame, cfg: DedupConfig = DEFAULT,
                  tiers: tuple[str, ...] = ("exact", "near_image",
                                            "near_caption", "containment"),
                  verify_pixels: bool = True,
                  run_id: str = "run",
                  persist_input: bool = True,
-                 validate_payloads: bool = True) -> DedupResult:
+                 checkpoint_dir: str | None = None) -> DedupResult:
     """persist_input=True caches the full input (right for synthesized or
     expensive-to-recompute inputs at sandbox scale). For a parquet/Iceberg
     source pass False: each tier then scans only its pruned columns from
     storage; the payload bytes are read once up front (fused
     validation+digest pass) plus once per verified-candidate PSNR join —
     you cannot cache 100 TB of payload bytes, and the narrow caption/phash
-    projections the other tiers need are cached separately anyway."""
+    projections the other tiers need are cached separately anyway.
+
+    ``checkpoint_dir`` makes the run resumable: every stage commits to a
+    StageStore there, keyed by the config fingerprint and the input's
+    identity token, and a later call reads committed stages back (SURVEY.md
+    §5 item 5: kill after a stage, restart, identical output)."""
     if persist_input:
         images = images.persist()
-    bad = None
-    digests = None
-    if validate_payloads:
-        feats = validation_features(images).persist()
-        bad = bad_ids_from_features(feats, cfg)
-        # broadcast anti-join of the (tiny) bad set; no eager count needed
-        images = images.join(F.broadcast(bad), "image_id", "left_anti")
-        digests = feats.join(F.broadcast(bad), "image_id", "left_anti") \
-            .select("image_id", "digest")
-    edges = candidate_edges(images, cfg, tiers, verify_pixels,
-                            digests=digests).persist()
-    clusters = connected_components(
-        canonical_pairs(edges), nodes=images.select("image_id"), cfg=cfg
-    )
-    verdicts = verdicts_from_clusters(images, clusters, edges)
-    metrics = build_metrics(run_id, images, edges, verdicts, quarantined=bad)
+    store = None
+    if checkpoint_dir is not None:
+        store = StageStore(images.sparkSession, checkpoint_dir, cfg, run_id,
+                           input_token=input_identity(images))
+    feats = _stage(store, "validate", lambda: validation_features(images),
+                   persist=True)
+    bad = bad_ids_from_features(feats, cfg)
+    # broadcast anti-join of the (tiny) bad set; no eager count needed
+    images = images.join(F.broadcast(bad), "image_id", "left_anti")
+    digests = feats.join(F.broadcast(bad), "image_id", "left_anti") \
+        .select("image_id", "digest")
+    edges = _stage(store, "edges",
+                   lambda: candidate_edges(images, cfg, tiers, verify_pixels,
+                                           digests=digests),
+                   persist=True)
+    clusters = _stage(store, "clusters",
+                      lambda: connected_components(
+                          canonical_pairs(edges),
+                          nodes=images.select("image_id"), cfg=cfg),
+                      persist=False)
+    verdicts = _stage(store, "verdicts",
+                      lambda: verdicts_from_clusters(images, clusters, edges),
+                      persist=False)
+    metrics = _stage(store, "metrics",
+                     lambda: build_metrics(run_id, images, edges, verdicts,
+                                           quarantined=bad),
+                     persist=False)
     return DedupResult(pairs=edges, clusters=clusters, verdicts=verdicts, metrics=metrics)

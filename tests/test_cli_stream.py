@@ -2,9 +2,12 @@
 (a) the command routes to the SHARDED stateful operator by default and its
 committed output equals the batch answer, and (b) re-running against the
 same directory with the same checkpoint processes NOTHING new
-(exactly-once across process restarts of the availableNow loop)."""
+(exactly-once across process restarts of the availableNow loop). The
+printed digest count is the deduped answer, independent of --max-files."""
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -19,7 +22,11 @@ def _captures(spark):
     return probe.select("record_id", "digest", "ts")
 
 
-def test_stream_dedup_cli_sharded_default_matches_batch(spark, tmp_path):
+def _printed(out, label):
+    return int(re.search(rf"^\s*{label}\s+(\d+)", out, re.M).group(1))
+
+
+def test_stream_dedup_cli_sharded_default_matches_batch(spark, tmp_path, capsys):
     src = str(tmp_path / "arrivals")
     out = str(tmp_path / "sink")
     caps = _captures(spark)
@@ -28,8 +35,13 @@ def test_stream_dedup_cli_sharded_default_matches_batch(spark, tmp_path):
     rc = main(["--cores", "8", "stream-dedup", "--input", src,
                "--output", out, "--max-files", "2"])
     assert rc == 0
+    printed = capsys.readouterr().out
+    assert _printed(printed, "digests") == caps.select("digest").distinct().count()
 
     from deduplicator_spark.streaming.sink import read_committed
+
+    assert _printed(printed, "running-total rows") == \
+        read_committed(spark, out).count()
 
     got = (
         read_committed(spark, out)
